@@ -17,53 +17,49 @@ only applied to strings containing ':').
 
 from __future__ import annotations
 
-import ipaddress
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 
-def normalize_ipv6_py(value: str | None) -> str | None:
-    """Pure-Python kernel: canonicalize one IP string, None on failure.
+def _make_normalizer():
+    """Build the one-value kernel shared by the Pandas UDF and the embargo
+    day's archive splitter.
 
-    The ``:::`` → ``::`` pre-repair mirrors the sidestream quirk; full
-    canonicalization (leading zeros, longest-zero-run compression) comes from
-    ``ipaddress.ip_address`` which implements RFC 5952.
+    It is nested (not a module-level function) so cloudpickle serializes it
+    by value: executors never need this package importable (same policy as
+    sources/tar_source.py).
     """
-    if value is None or value == "":
-        return None
-    if ":" not in value:
-        # IPv4 (or dotted garbage): the reference does not touch it.
-        return value
-    repaired = value.replace(":::", "::")
-    try:
-        return str(ipaddress.ip_address(repaired))
-    except ValueError:
-        return None
+    import ipaddress as _ipaddress
+
+    def normalize_ipv6_py(value: str | None) -> str | None:
+        """Canonicalize one IP string, None on failure.
+
+        The ``:::`` → ``::`` pre-repair mirrors the sidestream quirk; full
+        canonicalization (leading zeros, longest-zero-run compression) comes
+        from ``ipaddress.ip_address``, which implements RFC 5952.
+        """
+        if value is None or value == "":
+            return None
+        if ":" not in value:
+            # IPv4 (or dotted garbage): the reference does not touch it.
+            return value
+        try:
+            return str(_ipaddress.ip_address(value.replace(":::", "::")))
+        except ValueError:
+            return None
+
+    return normalize_ipv6_py
+
+
+normalize_ipv6_py = _make_normalizer()
 
 
 def _make_udf():
-    """Build the Pandas UDF with a self-contained kernel.
-
-    The kernel is nested (not a module-level reference) so cloudpickle
-    serializes it by value — executors never need this package importable
-    (same policy as sources/tar_source.py).
-    """
+    """Build the Pandas UDF over the shared nested normalizer."""
+    norm = _make_normalizer()
 
     def _kernel(s):
-        import ipaddress as _ipaddress
-
-        def norm(value):
-            if value is None or value == "":
-                return None
-            if ":" not in value:
-                return value
-            try:
-                return str(_ipaddress.ip_address(value.replace(":::", "::")))
-            except ValueError:
-                return None
-
         return s.map(norm)
 
     return F.pandas_udf(_kernel, StringType())

@@ -15,10 +15,6 @@ and there are many — the right parallel grain at 100 TB).
 
 from __future__ import annotations
 
-import gzip
-import io
-import tarfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -121,6 +117,20 @@ def _make_exploder(quarantine: bool = False):
     return _explode_archives
 
 
+def list_archives(spark: SparkSession, path_glob: str) -> DataFrame:
+    """The ``.tgz`` objects under ``path_glob`` as ``binaryFile`` rows (path,
+    modificationTime, length, content), one per archive.
+
+    ``pathGlobFilter`` keeps the listing pruned at the source (the analog of
+    the reference's name filter embargo.go:279-281).
+    """
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.tgz")
+        .load(path_glob)
+    )
+
+
 def read_tar_entries(
     spark: SparkSession,
     path_glob: str,
@@ -130,9 +140,8 @@ def read_tar_entries(
     """Load every .tgz under ``path_glob`` as a DataFrame of tar entries
     (SURVEY D3: the atomic record).
 
-    ``pathGlobFilter`` keeps the listing pruned at the source (the analog of
-    the reference's name filter embargo.go:279-281); the P2 regular-file
-    filter (embargo.go:158-159) is applied unless disabled.
+    The P2 regular-file filter (embargo.go:158-159) is applied unless
+    disabled.
 
     ``on_corrupt='raise'`` (default) fails the job on a bad archive;
     ``'quarantine'`` adds an ``error`` column and turns each corrupt
@@ -141,11 +150,7 @@ def read_tar_entries(
     """
     if on_corrupt not in ("raise", "quarantine"):
         raise ValueError(f"on_corrupt must be raise|quarantine, got {on_corrupt!r}")
-    archives = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tgz")
-        .load(path_glob)
-    )
+    archives = list_archives(spark, path_glob)
     quarantine = on_corrupt == "quarantine"
     entries = archives.mapInPandas(
         _make_exploder(quarantine),
@@ -183,47 +188,76 @@ def register_tar_udtf(spark: SparkSession, name: str = "explode_tar"):
     return ExplodeTar
 
 
+def _make_packer():
+    """Build the archive packer shared by ``repack_archives`` and the
+    embargo day's archive splitter (nested for by-value pickling).
+
+    ``pack(archive, visibility, entries)`` takes ``(path, mode, mtime,
+    data)`` tuples, ``mtime`` in epoch seconds, and returns ``(out_name,
+    blob)``, ``blob`` None when there are no entries: the embargoed side is
+    named ``-e.tgz`` (embargo.go:105) and the public side ``-p.tgz`` (the
+    golden-file convention, embargo_test.go:77,87).  Deterministic output:
+    entries are sorted by path and the gzip mtime is zeroed, so reruns are
+    byte-stable (SURVEY ST3).
+    """
+
+    def pack(archive: str, visibility: str, entries):
+        import gzip as _gzip
+        import io as _io
+        import tarfile as _tarfile
+
+        suffix = "-e.tgz" if visibility == "private" else "-p.tgz"
+        stem = archive[: -len(".tgz")] if archive.endswith(".tgz") else archive
+        if not entries:
+            return stem + suffix, None
+        buf = _io.BytesIO()
+        with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
+            with _tarfile.open(fileobj=gz, mode="w") as tar:
+                for path, mode, mtime, data in sorted(entries, key=lambda e: e[0]):
+                    info = _tarfile.TarInfo(name=path)
+                    info.size = len(data)
+                    info.mode = int(mode)
+                    info.mtime = int(mtime)
+                    tar.addfile(info, _io.BytesIO(data))
+        return stem + suffix, buf.getvalue()
+
+    return pack
+
+
 def repack_archives(entries: DataFrame) -> DataFrame:
     """K1 half — regroup classified entries into per-(archive, visibility)
     .tgz blobs, mirroring the reference's two in-memory output archives
     (embargo.go:126-127, tar writers 179-199).
 
-    Returns ``(archive, visibility, out_name, content)`` with the embargoed
-    side renamed ``-e.tgz`` (embargo.go:105) and the public side ``-p.tgz``
-    (the golden-file convention, embargo_test.go:77,87).  Deterministic
-    output: entries are sorted by path inside each repacked archive and
-    gzip mtime is zeroed, so reruns are byte-stable (SURVEY ST3).
+    Returns ``(archive, visibility, out_name, content)``; names and bytes
+    come from ``_make_packer``.  ``embargo_day`` packs inside its one-pass
+    kernel instead; this grouped form serves entries that are already rows.
     """
-    def _repack(key, pdf):
-        import gzip as _gzip
-        import io as _io
-        import tarfile as _tarfile
+    pack = _make_packer()
 
+    def _repack(key, pdf):
         import pandas as _pd
 
         archive, visibility = key
-        buf = _io.BytesIO()
-        with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-            with _tarfile.open(fileobj=gz, mode="w") as tar:
-                for _, r in pdf.sort_values("path").iterrows():
-                    info = _tarfile.TarInfo(name=r["path"])
-                    data = bytes(r["content"]) if r["content"] is not None else b""
-                    info.size = len(data)
-                    info.mode = int(r["mode"])
-                    info.mtime = int(_pd.Timestamp(r["mtime"]).timestamp())
-                    tar.addfile(info, _io.BytesIO(data))
-        suffix = "-e.tgz" if visibility == "private" else "-p.tgz"
-        out_name = (
-            archive[: -len(".tgz")] + suffix
-            if archive.endswith(".tgz")
-            else archive + suffix
+        out_name, blob = pack(
+            archive,
+            visibility,
+            [
+                (
+                    r.path,
+                    r.mode,
+                    _pd.Timestamp(r.mtime).timestamp(),
+                    bytes(r.content) if r.content is not None else b"",
+                )
+                for r in pdf.itertuples(index=False)
+            ],
         )
         return _pd.DataFrame(
             {
                 "archive": [archive],
                 "visibility": [visibility],
                 "out_name": [out_name],
-                "content": [buf.getvalue()],
+                "content": [blob],
             }
         )
 

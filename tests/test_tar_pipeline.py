@@ -263,7 +263,7 @@ def test_tar_python_datasource_writer_roundtrip(spark, tmp_path):
 
 
 @pytest.mark.parametrize("scheme", ["plain", "file"])
-def test_connectors_accept_uri_schemes(spark, tmp_path, scheme):
+def test_connectors_accept_uri_schemes(spark, tmp_path, scheme, sidestream_tgz):
     """VERDICT next-round #6: the connectors must not be hardwired to bare
     local paths.  The built-in parquet sink/source takes any Hadoop FS URI
     natively; the Python tar DataSource resolves explicit ``file://`` URIs
@@ -279,7 +279,7 @@ def test_connectors_accept_uri_schemes(spark, tmp_path, scheme):
         return f"file://{p}" if scheme == "file" else str(p)
 
     spark.dataSource.register(make_tar_datasource())
-    entries = read_tar_entries(spark, u(INPUT_TGZ)).select("path", "content")
+    entries = read_tar_entries(spark, u(sidestream_tgz)).select("path", "content")
     n = entries.count()
     assert n > 0
 
@@ -295,7 +295,7 @@ def test_connectors_accept_uri_schemes(spark, tmp_path, scheme):
     assert spark.read.format("tar_archive").load(u(packed)).count() == n
 
 
-def test_tar_datasource_append_accumulates(spark, tmp_path):
+def test_tar_datasource_append_accumulates(spark, tmp_path, sidestream_tgz):
     """A second append job into the same directory must ADD archives, not
     clobber the first job's (final names carry a per-job token, like
     Spark's FileCommitProtocol jobId)."""
@@ -305,7 +305,7 @@ def test_tar_datasource_append_accumulates(spark, tmp_path):
     from etl_embargo_spark.sources.tar_source import read_tar_entries
 
     spark.dataSource.register(make_tar_datasource())
-    entries = read_tar_entries(spark, INPUT_TGZ).select("path", "content")
+    entries = read_tar_entries(spark, sidestream_tgz).select("path", "content")
     out = str(tmp_path / "packed")
     first = entries.limit(2).withColumn(
         "path", F.concat(F.lit("one/"), F.col("path"))
@@ -326,7 +326,7 @@ def test_tar_datasource_append_accumulates(spark, tmp_path):
     assert any(p.startswith("two/") for p in back)
 
 
-def test_tar_datasource_overwrite_is_staged(spark, tmp_path):
+def test_tar_datasource_overwrite_is_staged(spark, tmp_path, sidestream_tgz):
     """mode('overwrite') must keep the old archives until the commit
     point (stage-then-swap), and afterwards only the new job's archives
     remain."""
@@ -336,7 +336,7 @@ def test_tar_datasource_overwrite_is_staged(spark, tmp_path):
     from etl_embargo_spark.sources.tar_source import read_tar_entries
 
     spark.dataSource.register(make_tar_datasource())
-    entries = read_tar_entries(spark, INPUT_TGZ).select("path", "content")
+    entries = read_tar_entries(spark, sidestream_tgz).select("path", "content")
     out = str(tmp_path / "packed")
     entries.repartition(2).write.format("tar_archive").mode("append").save(out)
     n_before = len([f for f in os.listdir(out) if f.endswith(".tgz")])
@@ -349,7 +349,7 @@ def test_tar_datasource_overwrite_is_staged(spark, tmp_path):
     assert spark.read.format("tar_archive").load(out).count() >= 1
 
 
-def test_corrupt_archive_quarantine_and_raise(spark, tmp_path):
+def test_corrupt_archive_quarantine_and_raise(spark, tmp_path, sidestream_tgz):
     """A truncated .tgz among good archives: on_corrupt='quarantine'
     yields the good archives' entries plus ONE error marker row per bad
     archive; the default raise mode fails the job loudly."""
@@ -362,9 +362,9 @@ def test_corrupt_archive_quarantine_and_raise(spark, tmp_path):
 
     d = tmp_path / "mixed"
     d.mkdir()
-    shutil.copy(INPUT_TGZ, d / "good.tgz")
+    shutil.copy(sidestream_tgz, d / "good.tgz")
     # a truncated gzip stream: valid magic, impossible to decode fully
-    (d / "bad.tgz").write_bytes(Path(INPUT_TGZ).read_bytes()[:100])
+    (d / "bad.tgz").write_bytes(Path(sidestream_tgz).read_bytes()[:100])
 
     q = read_tar_entries(spark, str(d), on_corrupt="quarantine")
     rows = q.collect()
@@ -376,7 +376,7 @@ def test_corrupt_archive_quarantine_and_raise(spark, tmp_path):
     assert len(good) > 0
     assert all(r["archive"] == "good.tgz" for r in good)
     # good entries match the clean read exactly
-    clean = read_tar_entries(spark, INPUT_TGZ).collect()
+    clean = read_tar_entries(spark, sidestream_tgz).collect()
     assert {r["path"] for r in good} == {r["path"] for r in clean}
 
     with _pytest.raises(Exception):
